@@ -97,6 +97,12 @@ def test_get_result_errors(engine):
     with pytest.raises(ResultError):
         engine.get_result(job_id, token="wrong")
     assert engine.get_result(job_id, token="secret")
+    # the constant-time compare works on bytes, so non-ASCII tokens compare too
+    job_id = engine.launch("tk", "identity", KVS, token="sécret")
+    engine.wait(job_id)
+    with pytest.raises(ResultError, match="wrong token"):
+        engine.get_result(job_id, token="secret")
+    assert engine.get_result(job_id, token="sécret")
 
 
 def test_result_ttl_gc(engine):
@@ -146,6 +152,59 @@ def test_apply_df_construction_launches_no_jobs(engine, spark):
     ]
 
 
+def test_launch_runs_one_spark_job_with_one_shuffle(engine, spark):
+    """A launch+wait is a single Spark action over a single shuffle: one
+    job of at most two stages (map side, reduce side) -- no emptiness
+    probe, no sortByKey sampling jobs, no second range shuffle."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("mr-footprint", "launch footprint")
+    try:
+        job_id = engine.launch("wc", "wordcount", KVS, mapper_num=2, reducer_num=2)
+        engine.wait(job_id, timeout=60)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    spark_jobs = tracker.getJobIdsForGroup("mr-footprint")
+    assert len(spark_jobs) == 1
+    assert len(tracker.getJobInfo(spark_jobs[0]).stageIds) <= 2
+
+
+def test_empty_map_never_calls_reduce(spark):
+    """With no map output there are no key groups, so a reduce_fn that
+    raises is never invoked and the job finishes with [] (master.cc:624-627)."""
+    from tmapreduce_spark.registry import JobRegistry
+
+    def no_map(key, value):
+        return []
+
+    def bad_reduce(key, values):
+        raise RuntimeError("reduce must not run")
+
+    reg = JobRegistry()
+    reg.register("empty-map-bad-reduce", no_map, bad_reduce)
+    engine = MapReduceEngine(spark, registry=reg)
+    job_id = engine.launch("em", "empty-map-bad-reduce", KVS, 2, 3, token="t")
+    assert engine.wait(job_id, timeout=60) is JobStage.FINISHED
+    assert engine.get_result(job_id, token="t") == []
+
+
+def test_combiner_matches_plain_on_many_documents(engine):
+    """wordcount and wordcount+c agree on a few hundred documents split over
+    more reducers than mappers."""
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
+    kvs = [
+        (f"doc{i:03d}", " ".join(words[(i * j) % len(words)] for j in range(1, 2 + i % 9)))
+        for i in range(300)
+    ]
+    pj = engine.launch("p", "wordcount", kvs, mapper_num=3, reducer_num=4)
+    cj = engine.launch("c", "wordcount+c", kvs, mapper_num=3, reducer_num=4)
+    engine.wait(pj, timeout=120), engine.wait(cj, timeout=120)
+    plain = engine.get_result(pj)
+    assert plain == engine.get_result(cj)
+    counts = Counter(w for _k, v in kvs for w in v.split())
+    assert plain == [x for w in sorted(counts) for x in (w, str(counts[w]))]
+
+
 def test_combiner_results_identical_to_plain(spark):
     """The map-side combiner must not change results — only shuffle volume."""
     from tmapreduce_spark.mapreduce import MapReduceEngine
@@ -189,7 +248,9 @@ def test_async_launch_observable_lifecycle(spark):
     deadline = _time.time() + 10
     while engine.stage_of(job_id) is JobStage.INIT and _time.time() < deadline:
         _time.sleep(0.01)
-    assert engine.stage_of(job_id) in (JobStage.MAPPING, JobStage.MERGING, JobStage.REDUCING)
+    # map, shuffle and reduce are one Spark job: the driver thread reports
+    # MAPPING for all of it and never claims a later stage early.
+    assert engine.stage_of(job_id) is JobStage.MAPPING
     with pytest.raises(ResultError, match="not finished"):
         engine.get_result(job_id, token="t")
 
@@ -218,10 +279,9 @@ def test_async_launch_error_surfaces(spark):
 
 
 def test_failed_reduce_unpersists_cached_rdd(spark):
-    """A reduce-stage failure must not leak the cached map RDD: the
-    try/finally around the post-cache pipeline guarantees unpersist() even
-    when the collect raises, so failed jobs can't accumulate pinned executor
-    memory across a long-lived session."""
+    """A reduce-stage failure must leave no persistent RDD behind, so failed
+    jobs can't accumulate pinned executor memory across a long-lived
+    session (the pipeline caches nothing)."""
     from tmapreduce_spark.registry import JobRegistry, charcount_map
 
     def bad_reduce(key, values):

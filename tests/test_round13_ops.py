@@ -110,3 +110,15 @@ def test_jw_char_prune_never_drops_a_match():
         sim = _jaro_winkler_py(a, b)
         if sim >= 0.9:
             assert kept, (a, b, sim, c, la, lb)
+
+
+def test_residue_bucket_expr_rejects_narrow_width():
+    """Below 7 components some residue class is empty; the builder must
+    refuse in Python rather than emit SQL that fails to parse."""
+    import pytest
+
+    from tmapreduce_spark.functions.similarity import residue_bucket_expr
+
+    with pytest.raises(ValueError, match="dim >= 7"):
+        residue_bucket_expr("qe", 6, "0")
+    assert "size(qe) = 7" in residue_bucket_expr("qe", 7, "0")

@@ -1,10 +1,11 @@
 """Reference-parity MapReduce job API on Spark.
 
 Implements the reference's complete engine-executed dataflow (SURVEY.md §2A
-items 1-10) as one Spark lineage:
+items 1-10) as one Spark job with one shuffle:
 
     validate -> sort-by-key -> contiguous partition -> flatMap(map_fn)
-      -> groupByKey -> key-sort -> flatMap(reduce_fn) -> ordered collect
+      -> hash-partition + sort by (key, subjob, seq) -> reduce_fn per key run
+      -> collect -> driver key-sort + concat
 
 Reference semantics preserved (file:line into /root/reference/):
 
@@ -20,15 +21,18 @@ Reference semantics preserved (file:line into /root/reference/):
   ``src/tmapreduce/wrapper.cc:10-31``).
 - **Shuffle/Merge**: group values by key, key-sorted output
   (``src/tmapreduce/job.cc:45-66``); within-key value order is
-  (map-subjob index, emission order) — reproduced here by tagging each map
-  output with ``(partition_index, emission_seq)`` and sorting the group
-  (``job.cc:51-59`` ordering contract, SURVEY §1.4).
-- **Empty-shuffle short-circuit**: zero map output pairs skips reduce and
-  finishes with an empty result (``master.cc:624-627``).
+  (map-subjob index, emission order) — reproduced here by keying each map
+  output ``(key, partition_index, emission_seq)``, hash-partitioning on the
+  key alone and sorting within partitions, so each key's values arrive as
+  one contiguous, already-ordered run (``job.cc:51-59`` ordering contract,
+  SURVEY §1.4).
+- **Empty-shuffle short-circuit**: zero map output pairs means zero key
+  runs, so reduce never runs and the job finishes with an empty result
+  (``master.cc:624-627``).
 - **Reduce**: per-group flatMap of the user function
   (``src/tmapreduce/wrapper.cc:33-55``).
-- **Finish**: results concatenated in key-sorted subjob order into one flat
-  string array (``src/tmapreduce/job.cc:68-77``).
+- **Finish**: per-key results, collected once, sorted by key on the driver
+  and concatenated into one flat string array (``src/tmapreduce/job.cc:68-77``).
 - **Result lifecycle**: per-job bearer token checked at get_result
   (``master.cc:691-693``, ``src/tmapreduce/job.h:93``); finished results GC'd
   after 3600 s (``master.cc:449-463``, ``master.h:27``).
@@ -47,11 +51,14 @@ materialization.
 
 from __future__ import annotations
 
+import hmac
+import itertools
 import threading
 import time
 from dataclasses import dataclass, field
 from enum import Enum
 
+from pyspark.rdd import portable_hash
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -71,7 +78,9 @@ JOB_RESULT_TIMEOUT_SECOND = 3600.0
 class JobStage(Enum):
     """Mirror of the reference's job stage machine for observability
     (``/root/reference/src/tmapreduce/job.h:26-39``); Spark collapses the
-    wait/partition states into its own DAG scheduling."""
+    wait/partition states into its own DAG scheduling, and ``launch`` runs
+    map, merge and reduce as one Spark job, so it only reports INIT,
+    MAPPING and FINISHED."""
 
     INIT = "INIT"
     MAPPING = "MAPPING"
@@ -129,9 +138,10 @@ class MapReduceEngine:
         responds as soon as the job is admitted (``gateway.cc:131-157``,
         ``master.cc:489-514``) and the client polls get_result until the
         master stops answering "job not finished"
-        (``example/word_count/word_count_client.cc:54``). Stage transitions
-        (MAPPING/MERGING/REDUCING, ``job.h:26-39``) are observable from other
-        threads via :meth:`stage_of`; use :meth:`wait` to block."""
+        (``example/word_count/word_count_client.cc:54``). The job is MAPPING
+        while its single Spark job (map, shuffle and reduce) runs and
+        FINISHED once results are back; :meth:`stage_of` observes this from
+        other threads; use :meth:`wait` to block."""
         self._validate(job_type, kvs, mapper_num, reducer_num)
         jt = self.registry.get(job_type)  # unknown type rejected at admission
         with self._lock:
@@ -180,8 +190,7 @@ class MapReduceEngine:
         mapper_num: int,
         reducer_num: int,
     ) -> None:
-        map_fn, reduce_fn = jt.map_fn, jt.reduce_fn
-        sc = self.spark.sparkContext
+        map_fn, reduce_fn, combine_fn = jt.map_fn, jt.reduce_fn, jt.combine_fn
 
         # Ingest key-sort (master.cc:736-738). Python's sort is stable, so
         # equal keys keep payload order, matching std::sort's effect on the
@@ -194,74 +203,48 @@ class MapReduceEngine:
         # observationally identical (same emissions, same (part, seq) tags).
         mapper_num = min(mapper_num, len(kvs_sorted))
 
-        job.stage = JobStage.MAPPING
-        # Contiguous near-equal slices == Job::Partition (job.cc:10-43).
-        indexed = sc.parallelize(list(enumerate(kvs_sorted)), mapper_num)
-
         def run_map(part_idx: int, it):
-            # One C-wrapper loop per subjob slice (wrapper.cc:10-31); tag each
-            # emission with (subjob index, emission seq) to reproduce the
-            # reference's deterministic within-key value order (job.cc:51-59).
-            seq = 0
-            for _i, (k, v) in it:
-                for out_k, out_v in map_fn(k, v):
-                    yield out_k, (part_idx, seq, out_v)
-                    seq += 1
+            # One C-wrapper loop per subjob slice (wrapper.cc:10-31). Each
+            # emission is keyed (key, subjob index, emission seq) so the
+            # shuffle's sort yields the reference's within-key value order
+            # (job.cc:51-59) with no per-group re-sort.
+            emitted = (out for k, v in it for out in map_fn(k, v))
+            if combine_fn is not None:
+                # Map-side combine (see apply_df): per-partition
+                # pre-aggregation before the shuffle; registering a combiner
+                # asserts the reducer is insensitive to within-key order.
+                by_key: dict[str, list[str]] = {}
+                for k, v in emitted:
+                    by_key.setdefault(k, []).append(v)
+                emitted = (
+                    (k, out) for k, vs in by_key.items() for out in combine_fn(k, vs)
+                )
+            for seq, (k, v) in enumerate(emitted):
+                yield (k, part_idx, seq), v
 
-        mapped = indexed.mapPartitionsWithIndex(run_map)
+        def run_reduce(it):
+            # Every copy of a key hashed to this reducer and arrives sorted
+            # by (key, subjob, seq): each contiguous key run is one group.
+            for k, run in itertools.groupby(it, key=lambda kv: kv[0][0]):
+                yield k, list(reduce_fn(k, [v for _ck, v in run]))
 
-        if jt.combine_fn is not None:
-            combine_fn = jt.combine_fn
-
-            # Map-side combine (see apply_df): per-partition pre-aggregation
-            # before the shuffle. Combined values keep the (subjob, seq) tag
-            # shape so downstream is unchanged; registering a combiner
-            # asserts the reducer is insensitive to within-key value order.
-            def run_combine(part_idx: int, it):
-                groups: dict[str, list[str]] = {}
-                for k, (_p, _s, v) in it:
-                    groups.setdefault(k, []).append(v)
-                seq = 0
-                for k, vs in groups.items():
-                    for v in combine_fn(k, vs):
-                        yield k, (part_idx, seq, v)
-                        seq += 1
-
-            mapped = mapped.mapPartitionsWithIndex(run_combine)
-
-        # Cache before the emptiness probe: isEmpty() would otherwise run the
-        # map (and combine) stage once for the probe and again for the real
-        # shuffle — wasteful, and a non-deterministic user map_fn could make
-        # the probe disagree with the run.  try/finally so a failing
-        # groupByKey/collect or user reduce_fn can't leak the cached RDD for
-        # the session (failed jobs would otherwise pin executor memory).
-        mapped = mapped.cache()
-        try:
-            # Empty-shuffle short-circuit (master.cc:624-627).
-            if mapped.isEmpty():
-                job.stage = JobStage.FINISHED
-                job.results = []
-                job.finish_time = time.time()
-                return
-
-            job.stage = JobStage.MERGING
-            # Merge: group by key + global key sort (job.cc:45-66). sortByKey's
-            # range partitioner yields key-ordered partitions, so collect()
-            # concatenates in key order == Job::Finish (job.cc:68-77).
-            grouped = mapped.groupByKey(numPartitions=max(reducer_num, 1)).sortByKey(
-                numPartitions=max(reducer_num, 1)
+        job.stage = JobStage.MAPPING
+        # One Spark job, one shuffle: contiguous near-equal slices ==
+        # Job::Partition (job.cc:10-43), then hash-partition by key and sort
+        # within partitions. Zero map output means zero groups, so reduce_fn
+        # never runs -- the empty-shuffle short-circuit (master.cc:624-627).
+        groups = (
+            self.spark.sparkContext.parallelize(kvs_sorted, mapper_num)
+            .mapPartitionsWithIndex(run_map)
+            .repartitionAndSortWithinPartitions(
+                reducer_num, partitionFunc=lambda ck: portable_hash(ck[0])
             )
-
-            job.stage = JobStage.REDUCING
-
-            def run_reduce(kv):
-                k, tagged = kv
-                values = [v for _p, _s, v in sorted(tagged, key=lambda t: (t[0], t[1]))]
-                return list(reduce_fn(k, values))
-
-            job.results = grouped.flatMap(run_reduce).collect()
-        finally:
-            mapped.unpersist()
+            .mapPartitions(run_reduce)
+            .collect()
+        )
+        # Job::Finish (job.cc:68-77): concatenate per-key outputs in key order.
+        groups.sort(key=lambda g: g[0])
+        job.results = [out for _k, outs in groups for out in outs]
         job.stage = JobStage.FINISHED
         job.finish_time = time.time()
 
@@ -275,7 +258,7 @@ class MapReduceEngine:
         job = self._jobs.get(job_id)
         if job is None:
             raise ResultError(f"no such job: {job_id}")
-        if job.token != token:
+        if not hmac.compare_digest(job.token.encode(), token.encode()):
             raise ResultError("wrong token")
         if job.stage is not JobStage.FINISHED:
             raise ResultError(f"job not finished (stage={job.stage.value})")
@@ -360,8 +343,6 @@ class MapReduceEngine:
             # three times and the data shuffled twice. Within-key value
             # order remains shuffle-arrival (the documented contract above);
             # order-sensitive reducers sort inside the UDF.
-            import itertools
-
             def reduce_runs(it):
                 for k, group in itertools.groupby(it, key=lambda kv: kv[0]):
                     vals = [v for _, v in group]
